@@ -71,15 +71,24 @@ object GraftApp {
     * branch renames `CustomerID` so [[Clustering.fit]]'s key column
     * (`custkey`) resolves on either surface (Spark resolves the feature
     * columns case-insensitively, but no casing of `CustomerID` is
-    * `custkey`). */
-  def loadRfm(spark: SparkSession, input: String): DataFrame =
-    if (input.endsWith(".csv"))
-      Retail.requireNonEmpty(
+    * `custkey`).
+    *
+    * The returned table is MATERIALIZED: an eager `localCheckpoint` runs
+    * the scan + aggregate once, the way the reference `.collect()`s its RFM
+    * frame (`src/data.rs:184`). The empty guard and every downstream action
+    * (the scaler aggregate, the K-Means feature cache) read the checkpoint
+    * blocks instead of re-scanning the input; the CSV is read once per
+    * call. The blocks are one row per customer, stored MEMORY_AND_DISK on
+    * the executors, and the ContextCleaner releases them once the frame is
+    * unreachable. */
+  def loadRfm(spark: SparkSession, input: String): DataFrame = {
+    val rfm =
+      if (input.endsWith(".csv"))
         Retail.loadAndProcess(spark, input)
-          .withColumnRenamed("CustomerID", "custkey"),
-        "RFM aggregation")
-    else
-      Retail.requireNonEmpty(Rfm.rfmOrders(spark, input), "RFM aggregation")
+          .withColumnRenamed("CustomerID", "custkey")
+      else Rfm.rfmOrders(spark, input)
+    Retail.requireNonEmpty(rfm.localCheckpoint(true), "RFM aggregation")
+  }
 
   /** Full pipeline: load → fit → chart files → stats report (reference
     * `src/main.rs:84-162`, which calls `generate_visualization_report` —
@@ -107,8 +116,9 @@ object GraftApp {
       cfg.tolerance)
 
   /** Prediction mode: full refit then classify one point (reference
-    * `src/main.rs:31-81` — the model is re-trained per invocation there;
-    * the session fit-cache in [[Clustering]] is our documented deviation). */
+    * `src/main.rs:31-81` — the model is re-trained per invocation, here
+    * too: this path calls the uncached [[Clustering.fit]]; only the
+    * contract queries share a session fit-cache). */
   def runPredictionMode(spark: SparkSession, cfg: Config, rfmStr: String): Int = {
     val point = parseRfmValues(rfmStr)
     val seg = fitFromConfig(spark, cfg)

@@ -2,8 +2,30 @@ package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare. A lane that
+  * throws is reported on stderr as it happens and again in a closing
+  * summary line, and the run then exits non-zero. */
 object Verify {
+  /** Write each lane's result to `outDir/<name>`; returns the lanes that
+    * threw, with their messages, in run order. */
+  def writeLanes(spark: SparkSession, sfDir: String, outDir: String,
+                 lanes: Seq[(String, Bench.Lane)]): Seq[(String, String)] =
+    lanes.flatMap { case (name, fn) =>
+      try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        None
+      } catch { case e: Throwable =>
+        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        Some(name -> String.valueOf(e.getMessage))
+      }
+    }
+
+  /** The closing line: how many lanes ran and which of them failed. */
+  def summaryLine(nLanes: Int, failed: Seq[String]): String =
+    if (failed.isEmpty) s"[verify] all $nLanes lanes written"
+    else s"[verify] ${failed.size}/$nLanes lanes failed: ${failed.mkString(", ")}"
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -31,13 +53,7 @@ object Verify {
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val selected = only.fold(SparkEntry.queries)(names =>
       SparkEntry.queries.filter { case (n, _) => names.exists(n.startsWith) })
-    selected.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-    }
+    val failed = writeLanes(spark, sfDir, outDir, selected.toSeq)
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -54,5 +70,7 @@ object Verify {
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+    println(summaryLine(selected.size, failed.map(_._1)))
+    if (failed.nonEmpty) sys.exit(1)
   }
 }

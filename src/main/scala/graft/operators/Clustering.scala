@@ -30,11 +30,13 @@ import org.apache.spark.sql.types._
   *    driver-side; MLlib's ClusteringEvaluator (squared Euclidean, full
   *    data) is intentionally not used.
   *
-  * Scale notes: feature building is two narrow passes (1-row stats aggregate
-  * broadcast back); each K-Means iteration is one map-reduce over the feature
-  * table with centroids broadcast — the textbook distributed Lloyd's. Nothing
-  * here collects more than k centroids, 6 scalars, or the ≤100-row
-  * silhouette sample to the driver.
+  * Scale notes: a fit reads its RFM input twice — one 1-row aggregate (μ, σ
+  * and the row count; the scalars come back as literals) and one pass that
+  * z-scores, repartitions and caches the feature table. Each K-Means
+  * iteration is then one map-reduce over that cache with centroids
+  * broadcast — the textbook distributed Lloyd's. Nothing here collects
+  * more than k centroids, 7 scalars, or the ≤100-row silhouette sample to
+  * the driver.
   */
 object Clustering {
 
@@ -50,10 +52,18 @@ object Clustering {
   /** Population-std z-scoring of the RFM table, keeping features as columns
     * plus an assembled `features` vector (reference M1–M3+M5). */
   def standardize(rfm: DataFrame): (DataFrame, ScalerStats) = {
+    val (assembled, scaler, _) = standardizeCounted(rfm)
+    (assembled, scaler)
+  }
+
+  /** [[standardize]] plus the row count, taken from the same one-row
+    * aggregate as μ/σ so a fit needs no separate `count()` job. */
+  private def standardizeCounted(rfm: DataFrame): (DataFrame, ScalerStats, Long) = {
     val statsRow = rfm.agg(
       avg("recency"), greatest(stddev_pop("recency"), lit(1e-8)),
       avg("frequency"), greatest(stddev_pop("frequency"), lit(1e-8)),
-      avg("monetary"), greatest(stddev_pop("monetary"), lit(1e-8))).head()
+      avg("monetary"), greatest(stddev_pop("monetary"), lit(1e-8)),
+      count(lit(1))).head()
     val mu = Array(statsRow.getDouble(0), statsRow.getDouble(2), statsRow.getDouble(4))
     val sd = Array(statsRow.getDouble(1), statsRow.getDouble(3), statsRow.getDouble(5))
     val z = FeatureCols.zipWithIndex.foldLeft(rfm) { case (df, (c, i)) =>
@@ -63,7 +73,7 @@ object Clustering {
       .setInputCols(FeatureCols.map(_ + "_z").toArray)
       .setOutputCol("features")
       .transform(z)
-    (assembled, ScalerStats(mu, sd))
+    (assembled, ScalerStats(mu, sd), statsRow.getLong(6))
   }
 
   /** Reference guards: k ∈ [3,5] (`src/model.rs:138-143`) and n ≥ k
@@ -76,8 +86,7 @@ object Clustering {
   /** Fit the full segmentation (reference `fit_kmeans`, `src/model.rs:132-177`). */
   def fit(rfm: DataFrame, k: Int = 4, maxIters: Int = 300,
           tol: Double = 1e-4, seed: Long = 42L): Segmentation = {
-    val (features, scaler) = standardize(rfm)
-    val n = rfm.count()
+    val (features, scaler, n) = standardizeCounted(rfm)
     validateK(k, n)
     // k-means|| init samples rows in partition order, and within-partition
     // order after a shuffle is not stable across runs — pin both so a seeded

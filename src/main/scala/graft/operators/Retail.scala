@@ -96,14 +96,18 @@ object Retail {
   }
 
   /** Full load: CSV path → RFM features (reference `load_and_process_data`,
-    * `src/data.rs:97-130` + `src/data.rs:147-191`). Empty-input guards
-    * (reference `src/data.rs:128-130`, `src/data.rs:186-188`) are surfaced
-    * lazily by [[requireNonEmpty]] so callers control when the action runs. */
+    * `src/data.rs:97-130` + `src/data.rs:147-191`). The returned frame is
+    * lazy. The empty-input guards (reference `src/data.rs:128-130`,
+    * `src/data.rs:186-188`) live in [[requireNonEmpty]], which runs a job:
+    * on this lazy frame that is a full scan + aggregate, so callers that
+    * act on the result again should materialize it first (as
+    * `GraftApp.loadRfm` does). */
   def loadAndProcess(spark: SparkSession, path: String,
                      referenceDate: String = DefaultReferenceDate): DataFrame =
     rfmFeatures(cleanTransactions(loadCsv(spark, path)), referenceDate)
 
-  /** Reference empty-result guard (`src/data.rs:128-130`, `186-188`). */
+  /** Reference empty-result guard (`src/data.rs:128-130`, `186-188`).
+    * Eager: `isEmpty` runs a limit-1 job over `df`'s whole lineage. */
   def requireNonEmpty(df: DataFrame, stage: String): DataFrame = {
     if (df.isEmpty)
       throw new IllegalArgumentException(s"No valid data after $stage")

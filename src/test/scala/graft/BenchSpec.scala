@@ -87,6 +87,62 @@ class BenchSpec extends AnyFunSuite {
     } finally Seq(tagged, untagged).foreach(Files.deleteIfExists)
   }
 
+  test("a lane that throws is listed as failed and kept out of the times") {
+    val spark = GraftTestSession.spark
+    val boom: Bench.Lane = (_, _) => throw new IllegalStateException("boom")
+    val ok: Bench.Lane = (s, _) => s.range(10).toDF("id")
+    assert(Bench.runOnce(spark, "unused", boom) == Left("boom"))
+    assert(Bench.runOnce(spark, "unused", ok).isRight)
+    // a lane that fails only on its third run still has no time
+    var calls = 0
+    val flaky: Bench.Lane = (s, d) => {
+      calls += 1
+      if (calls == 3) throw new RuntimeException("flaky") else ok(s, d)
+    }
+    // a huge calibration baseline: no segment reads as drifted
+    val m = Bench.measure(spark, "unused",
+      Seq("q_boom" -> boom, "q_flaky" -> flaky, "q_ok" -> ok), 1e9)
+    assert(m.failed == Seq("q_boom" -> "boom", "q_flaky" -> "flaky"))
+    assert(m.times.map(_._1) == Seq("q_ok"))
+    assert(m.times.head._2.size == 3)
+    assert(calls == 3) // no run after the failure
+    assert(Bench.failedField(m.failed.map(_._1)) ==
+      "\"failed\":[\"q_boom\",\"q_flaky\"]")
+    assert(Bench.failedField(Nil) == "\"failed\":[]")
+  }
+
+  test("fileIsClean: a map that lists failed lanes earns no protection") {
+    import java.nio.file.Files
+    def mapWith(failed: String): String =
+      s"""{"metric":"total","value":10.0,"unit":"sec","queries":{"q1":10.0},""" +
+      s""""contamination":{"stalled_queries":0,"n_queries":1,""" +
+      s""""calib_baseline":0.1,"calib_max":0.11,"calib_drift":1.1,""" +
+      s""""resampled":0,"stalled":[]},"failed":[$failed],"sf":"x"}"""
+    val none = Files.createTempFile("bench_nofail", ".json")
+    Files.writeString(none, mapWith(""))
+    val some = Files.createTempFile("bench_fail", ".json")
+    Files.writeString(some, mapWith("\"q2\""))
+    try {
+      assert(Bench.fileIsClean(none))
+      assert(!Bench.fileIsClean(some))
+    } finally Seq(none, some).foreach(Files.deleteIfExists)
+  }
+
+  test("Verify writes every lane that runs and returns the ones that threw") {
+    val spark = GraftTestSession.spark
+    val out = java.nio.file.Files.createTempDirectory("verify_lanes").toString
+    val ok: Bench.Lane = (s, _) => s.range(3).toDF("id")
+    val boom: Bench.Lane = (_, _) => throw new IllegalStateException("boom")
+    val failed = Verify.writeLanes(spark, "unused", out,
+      Seq("q_ok" -> ok, "q_boom" -> boom))
+    assert(failed == Seq("q_boom" -> "boom"))
+    assert(spark.read.parquet(s"$out/q_ok").count() == 3)
+    assert(!new java.io.File(s"$out/q_boom").exists())
+    assert(Verify.summaryLine(2, failed.map(_._1)) ==
+      "[verify] 1/2 lanes failed: q_boom")
+    assert(Verify.summaryLine(2, Nil) == "[verify] all 2 lanes written")
+  }
+
   test("codeFingerprint is stable within a build and non-trivial") {
     val fp = Bench.codeFingerprint()
     assert(fp == Bench.codeFingerprint())
